@@ -397,20 +397,29 @@ final class BigtableScan(
   /** Visible for tests/metrics: the ranges the scan will actually read. */
   private[connector] def currentRanges: Vector[RowRange] = effectiveRanges
 
+  /** Planning-time store statistics, fetched once per scan: Spark plans
+    * the partitions more than once per query, and each fetch is a store
+    * RPC. Runtime narrowing re-splits `effectiveRanges` against the same
+    * samples. An IllegalStateException means planning on a driver
+    * without the store.
+    */
+  private lazy val estimate: Option[(Long, Long)] =
+    try BigtableStores.resolve(cfg.storeName, shippedStore).estimateSize(cfg.table, comp.ranges)
+    catch { case _: IllegalStateException => None }
+
+  private lazy val samples: Seq[String] =
+    try BigtableStores.resolve(cfg.storeName, shippedStore).sampleRowKeys(cfg.table)
+    catch { case _: IllegalStateException => Nil }
+
   /** A16 improvement over the reference's `todo!()` statistics
     * (execute_plan.rs:152-157): range-scoped estimates from the store,
     * letting Catalyst auto-broadcast small connector tables in joins.
     */
-  override def estimateStatistics(): Statistics = {
-    val est =
-      try BigtableStores.resolve(cfg.storeName, shippedStore).estimateSize(cfg.table, comp.ranges)
-      catch { case _: IllegalStateException => None }
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        est.map(e => java.util.OptionalLong.of(e._2)).getOrElse(java.util.OptionalLong.empty())
-      override def numRows(): java.util.OptionalLong =
-        est.map(e => java.util.OptionalLong.of(e._1)).getOrElse(java.util.OptionalLong.empty())
-    }
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong =
+      estimate.map(e => java.util.OptionalLong.of(e._2)).getOrElse(java.util.OptionalLong.empty())
+    override def numRows(): java.util.OptionalLong =
+      estimate.map(e => java.util.OptionalLong.of(e._1)).getOrElse(java.util.OptionalLong.empty())
   }
 
   override def readSchema(): StructType = aggs match {
@@ -482,9 +491,6 @@ final class BigtableScan(
     * reference's single-partition scan (execute_plan.rs:84-86).
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val samples =
-      try BigtableStores.resolve(cfg.storeName, shippedStore).sampleRowKeys(cfg.table)
-      catch { case _: IllegalStateException => Nil } // planning on a driver without the store
     val split = BigtableScan.splitRanges(effectiveRanges, samples)
     val groups = BigtableScan.chunkContiguous(split, cfg.maxPartitions)
     groups.map(g => BigtableInputPartition(g, tsRange): InputPartition).toArray
@@ -497,12 +503,8 @@ final class BigtableScan(
     * allocation loses ~10% on point lookups — the default should
     * follow the data). Unknown statistics stay on the row path.
     */
-  private lazy val useColumnar: Boolean = cfg.vectorized.getOrElse {
-    val est =
-      try BigtableStores.resolve(cfg.storeName, shippedStore).estimateSize(cfg.table, comp.ranges)
-      catch { case _: IllegalStateException => None }
-    est.exists(_._1 >= cfg.vectorizedAutoRows)
-  }
+  private lazy val useColumnar: Boolean =
+    cfg.vectorized.getOrElse(estimate.exists(_._1 >= cfg.vectorizedAutoRows))
 
   override def createReaderFactory(): PartitionReaderFactory =
     // agg mode ignores the pushed limit: Spark never pushes a limit

@@ -18,16 +18,17 @@ import java.util.concurrent.atomic.AtomicBoolean
   * consumes, so a real client drops in behind [[BigtableStore]] without
   * touching the composer or the pivot.
   *
-  * Connection protocol (one RPC per connection, like the object-stream
-  * transport): the client sends one method byte, then its request as one
-  * frame; the server answers with zero or more `flag=0` message frames
-  * (each a `ReadRowsResponse` batch / `SampleRowKeysResponse` element /
-  * `MutateRowsResponse`), then exactly one terminal frame: `flag=1`
-  * empty (OK end-of-stream, gRPC's trailers-only success) or `flag=2`
-  * carrying a `google.rpc.Status` with the canonical code — re-thrown
-  * client-side as the matching exception class, so the mandatory-filter
-  * guard, unknown-table, and transient-fault semantics keep their shape
-  * across the hop (same contract [[SocketBigtableStore]] certifies).
+  * Connection protocol (one RPC per connection): the client sends one
+  * method byte, then its request as one frame; the server answers with
+  * zero or more `flag=0` message frames (each a `ReadRowsResponse`
+  * batch / `SampleRowKeysResponse` element / `MutateRowsResponse`), then
+  * exactly one terminal frame: `flag=1` empty (OK end-of-stream, gRPC's
+  * trailers-only success) or `flag=2` carrying a `google.rpc.Status`
+  * with the canonical code — re-thrown client-side as the matching
+  * exception class, so the mandatory-filter guard, unknown-table, and
+  * transient-fault semantics keep their shape across the hop. Nothing on
+  * either side deserializes objects: every frame is a schema-typed
+  * protobuf message.
   *
   * Two emulator-extension methods sit OUTSIDE the Bigtable data API
   * (their real-world counterparts live elsewhere): EstimateSize (the
@@ -49,8 +50,8 @@ object ProtoSocket {
   val FlagEndOk: Byte = 1
   val FlagError: Byte = 2
 
-  /** Rows per ReadRowsResponse frame — the same bounded-batch discipline
-    * as [[SocketProtocol.BatchRows]].
+  /** Rows per ReadRowsResponse frame: bounds both sides' memory while
+    * keeping per-frame overhead amortized.
     */
   val BatchRows = 512
 

@@ -93,6 +93,15 @@ object StreamingDedup {
   private[graft] val MaintenanceParallelismConf =
     "spark.graft.streaming.maintenanceParallelism"
 
+  /** The [[MaintenanceParallelismConf]] width, or `default` when unset.
+    * A value that is not an integer >= 1 fails loudly, naming the key.
+    */
+  private[streaming] def maintenanceParallelism(spark: SparkSession, default: Int): Int =
+    spark.conf.getOption(MaintenanceParallelismConf).fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$MaintenanceParallelismConf must be an integer >= 1, got '$v'"))
+    }
+
   private def verifySemiFilterMinBytes(spark: SparkSession): Long =
     spark.conf.getOption(VerifySemiFilterConf).map(_.toLong).getOrElse(VerifySemiFilterMinBytes)
 
@@ -647,8 +656,7 @@ object StreamingDedup {
     // wall time), but a memory-tight deployment can set
     // `spark.graft.streaming.maintenanceParallelism` to 2 or 1 to stage
     // the passes sequentially at the cost of idle tails.
-    val width = spark.conf.getOption(MaintenanceParallelismConf)
-      .map(_.toInt).getOrElse(3)
+    val width = maintenanceParallelism(spark, default = 3)
     val out = new java.util.concurrent.ConcurrentHashMap[String, DatasetCompaction]()
     parallelUnits(maxThreads = width, units = Seq(
       () => out.put("bands",

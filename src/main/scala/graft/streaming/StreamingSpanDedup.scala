@@ -223,8 +223,7 @@ object StreamingSpanDedup {
     // data only, so no such ordering exists between these two.)
     val out =
       new java.util.concurrent.ConcurrentHashMap[String, TieredCompaction.DatasetCompaction]()
-    val width = spark.conf.getOption(StreamingDedup.MaintenanceParallelismConf)
-      .map(_.toInt).getOrElse(2)
+    val width = StreamingDedup.maintenanceParallelism(spark, default = 2)
     StreamingDedup.parallelUnits(maxThreads = width, units = Seq(
       () => out.put("spans",
         TieredCompaction.compactKeyed(spark, s"$workDir/spans", targetRecordsPerFile,

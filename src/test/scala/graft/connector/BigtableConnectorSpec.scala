@@ -316,4 +316,42 @@ class BigtableConnectorSpec extends AnyFunSuite {
       .select(col("_row_key"))
     assert(df.collect().map(_.getString(0)).toSeq == Seq("b"))
   }
+
+  test("a point lookup fetches split samples once and the size estimate at most once") {
+    val b = new graft.store.InMemoryBigtable.Builder
+    (0 until 20).foreach { i =>
+      b.put("pl", f"k$i%02d",
+        graft.model.BtCell("f", "temperature", 100L, graft.model.CellCodec.encodeString(s"v$i")))
+    }
+    val store = new StatsCountingStore(b.build())
+    graft.store.BigtableStores.register("stats-counting", store)
+    spark.read.format("bigtable")
+      .option("store", "stats-counting").option("table", "pl")
+      .option("columnFamily", "f").option("partitionCols", "_row_key")
+      .option("qualifiers", "temperature:string")
+      .load()
+      .createOrReplaceTempView("stats_counting")
+    val rows = spark.sql("SELECT temperature FROM stats_counting WHERE `_row_key` = 'k07'").collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("v7"))
+    assert(store.samples.get == 1, s"sampleRowKeys calls: ${store.samples.get}")
+    assert(store.estimates.get <= 1, s"estimateSize calls: ${store.estimates.get}")
+  }
+}
+
+/** Counts the planning-time statistics calls a scan makes. */
+private final class StatsCountingStore(backing: graft.store.BigtableStore)
+    extends graft.store.BigtableStore {
+  val samples = new java.util.concurrent.atomic.AtomicInteger
+  val estimates = new java.util.concurrent.atomic.AtomicInteger
+  override def readRows(table: String, ranges: Seq[graft.model.RowRange],
+      filters: Seq[graft.model.RowFilter]): Iterator[graft.model.BtRow] =
+    backing.readRows(table, ranges, filters)
+  override def sampleRowKeys(table: String): Seq[String] = {
+    samples.incrementAndGet()
+    backing.sampleRowKeys(table)
+  }
+  override def estimateSize(table: String, ranges: Seq[graft.model.RowRange]): Option[(Long, Long)] = {
+    estimates.incrementAndGet()
+    backing.estimateSize(table, ranges)
+  }
 }

@@ -366,6 +366,22 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(CommitLog.currentFiles(s"$work/bands").forall(_.contains("/__p1=0/")))
   }
 
+  test("a malformed maintenanceParallelism fails loudly, naming the key (both dedup indexes)") {
+    val work = java.nio.file.Files.createTempDirectory("sdedup-width").toString
+    val key = StreamingDedup.MaintenanceParallelismConf
+    try Seq("abc", "0").foreach { bad =>
+      spark.conf.set(key, bad)
+      Seq[() => Any](
+        () => StreamingDedup.compactIndexDetailed(spark, work),
+        () => StreamingSpanDedup.compactIndexDetailed(spark, work)
+      ).foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(key) && e.getMessage.contains(">= 1") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("forced verify semi filter yields exactly the direct plan's pairs") {
     import spark.implicits._
     val b1 = Seq((1L, base), (2L, base),
