@@ -1,25 +1,23 @@
 package graft.connector
 
 import graft.{GraftTables, SparkEntry}
-import graft.store.{BigtableStores, SocketBigtableServer}
+import graft.store.BigtableStores
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Process-boundary certification of the whole connector gate suite:
+/** Process-boundary certification of the gates' own remote fixture:
   * every `bt_*` query in the SparkEntry registry must return identical
-  * results when the fixture store is resolved through a
-  * [[graft.store.SocketBigtableStore]] — every `readRows` /
-  * `sampleRowKeys` / `estimateSize` crossing a real localhost TCP hop —
-  * as when it is the in-JVM emulator. The swap is a registry
-  * re-registration under the SAME store name, so no gate code changes:
-  * whatever the gate plans (range pruning, server-side filters, DPP
-  * narrowing, aggregate pushdown, streaming reads), the store behind it
-  * is remote. This is the offline equivalent of pointing the reference
-  * connector at a real Bigtable endpoint instead of the emulator.
+  * results when the fixture store is resolved through the socket client
+  * that [[GraftTables.ensureRemote]] serves — the shared, long-lived
+  * `<store>-remote` server that `bt_remote_scan` and `bt_retry_scan`
+  * read — as when it is the in-JVM emulator. [[ProtoGateParitySpec]]
+  * certifies the wire with a fresh server per run; this suite certifies
+  * the fixture itself, so a server left in a bad state by an earlier
+  * gate (a half-read scan, a dropped connection) shows up here.
   *
-  * Gates that build their OWN stores (write roundtrips, retry
-  * injection) keep them — the suite proves the shared fixture path;
-  * their store wiring is their own test subject.
+  * The swap is a registry re-registration under the SAME store name, so
+  * no gate code changes. Gates that build their OWN stores (write
+  * roundtrips, retry injection) keep them.
   */
 class SocketGateParitySpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
@@ -31,22 +29,18 @@ class SocketGateParitySpec extends AnyFunSuite {
   private lazy val btGates: Seq[String] =
     SparkEntry.queries.keys.filter(_.startsWith("bt_")).toSeq.sorted
 
-  /** Run `body` with the shared fixture store served over a socket:
-    * the registry entry for `storeName(sf)` is swapped to the
-    * socket-backed client and restored afterwards (other suites in this
-    * JVM must keep seeing the in-JVM store).
+  /** Run `body` with the shared fixture store swapped for the
+    * `<store>-remote` socket client, restored afterwards (other suites in
+    * this JVM must keep seeing the in-JVM store). The remote server stays
+    * up: it belongs to [[GraftTables]], not to this suite.
     */
   private def withSocketStore[A](body: => A): A = {
-    GraftTables.ensure(spark, sf)
+    GraftTables.ensureRemote(spark, sf)
     val name = GraftTables.storeName(sf)
     val original = BigtableStores.get(name)
-    val server = new SocketBigtableServer(original)
-    BigtableStores.register(name, server.clientStore)
+    BigtableStores.register(name, BigtableStores.get(GraftTables.remoteStoreName(sf)))
     try body
-    finally {
-      BigtableStores.register(name, original)
-      server.close()
-    }
+    finally BigtableStores.register(name, original)
   }
 
   test("every bt_* gate returns identical results through the socket transport") {

@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the exact field/tag/varint encoding against hand-computed protobuf
   * (what `protoc` would emit for the same message), and round-trips
   * cover the full connector-emitted shape space. The transport tests
-  * then prove the bytes drive a real scan across a TCP hop: parity with
-  * the backing store, error shapes, a client whose only state is
+  * then prove the bytes drive a real scan across a TCP hop with the
+  * same semantics as the backing store; [[SocketStoreSpec]] certifies
+  * the transport's connection behaviour (a client whose only state is
   * (host, port), releasable partial scans, exact resume after a dropped
-  * connection, and concurrent scans.
+  * connection, concurrent scans).
   */
 class ReadRowsProtoSpec extends AnyFunSuite {
 
@@ -166,110 +167,5 @@ class ReadRowsProtoSpec extends AnyFunSuite {
       }).clientStore.mutateRows("t", Seq(("k", Seq(cell("q", 1L, "v")))))
     }
     assert(e.getMessage.contains("status 12"))
-  }
-
-  test("proto transport: client state is only (host, port): a serialized clone still reads") {
-    val bytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(client)
-      oos.close()
-      bos.toByteArray
-    }
-    assert(bytes.length < 4096, s"proto store handle should be tiny, was ${bytes.length}B")
-    val clone = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
-      .readObject().asInstanceOf[ProtoSocketBigtableStore]
-    assert(clone.readRows("t", Seq(RowRange.point("a")), Nil).map(_.rowKey).toSeq == Seq("a"))
-  }
-
-  test("proto transport: partially-consumed scan releases the connection via close()") {
-    val it = client.readRows("wide", Seq(RowRange.full), Nil)
-    assert(it.next().rowKey == "k000000") // pull one row, leave the rest
-    it match {
-      case c: AutoCloseable => c.close()
-      case other            => fail(s"proto scan iterator must be AutoCloseable, got ${other.getClass}")
-    }
-    // the socket is gone: further pulls see a closed stream, not a hang
-    assert(!it.hasNext)
-  }
-
-  test("proto transport: mid-scan connection drop is a transient fault and RetryingStore resumes exactly") {
-    // A rogue server that speaks the real wire (method byte + request
-    // frame in; `[flag][len][ReadRowsResponse]` frames out) but
-    // hard-drops the first two scans after 2 frames — no end-of-stream
-    // frame, no Status, just a closed socket (a crashed server / reset
-    // network). Later connections serve correctly. The real client must
-    // surface the truncation as TransientStoreException (NOT a clean
-    // end — that would be silent data loss), and RetryingStore must
-    // resume past the last delivered key over a fresh connection with
-    // no dupes or gaps.
-    import ProtoSocket._
-    import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-    val requests = new java.util.concurrent.ConcurrentLinkedQueue[Seq[RowRange]]()
-    val served = new java.util.concurrent.atomic.AtomicInteger(0)
-    val srv = new java.net.ServerSocket(0, 8, java.net.InetAddress.getByName("127.0.0.1"))
-    val accept = new Thread(() => {
-      try while (true) {
-        val sock = srv.accept()
-        val n = served.getAndIncrement()
-        val t = new Thread(() => {
-          try {
-            val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-            val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-            in.readByte() // method: every request here is a ReadRows
-            val (table, ranges, filters) = ReadRowsProto.decodeReadRowsRequest(readFrame(in)._2)
-            requests.add(ranges)
-            val batches = backing.readRows(table, ranges, filters).grouped(100)
-            var frames = 0
-            var dropped = false
-            while (batches.hasNext && !dropped) {
-              writeFrame(out, FlagMessage, ReadRowsProto.encodeReadRowsResponse(batches.next()))
-              out.flush()
-              frames += 1
-              // drop the raw-client probe below and the retried run's
-              // first attempt; later connections serve to the end
-              if (n <= 1 && frames == 2) { sock.close(); dropped = true }
-            }
-            if (!dropped) {
-              writeFrame(out, FlagEndOk, Array.emptyByteArray)
-              out.flush()
-              sock.close()
-            }
-          } catch { case _: Throwable => () }
-        })
-        t.setDaemon(true); t.start()
-      } catch { case _: Throwable => () }
-    })
-    accept.setDaemon(true); accept.start()
-    try {
-      val flaky = new ProtoSocketBigtableStore("127.0.0.1", srv.getLocalPort)
-      val e = intercept[TransientStoreException] {
-        flaky.readRows("wide", Seq(RowRange.full), Nil).size
-      }
-      assert(e.getMessage.contains("mid-stream"))
-      val retried = new RetryingStore(flaky, sleep = _ => ())
-      val keys = retried.readRows("wide", Seq(RowRange.full), Nil).map(_.rowKey).toSeq
-      assert(keys.size == 1500)
-      assert(keys == keys.sorted && keys.distinct.size == 1500)
-      val reqs = requests.toArray(Array.empty[Seq[RowRange]])
-      assert(reqs.length >= 3) // probe scan, dropped scan, resumed scan
-      val resumed = reqs.last
-      assert(RowRange.compareKeys(resumed.head.startKey, "k000199") > 0,
-        s"resumed scan must start past the last delivered key, got ${resumed.head.startKey}")
-    } finally srv.close()
-  }
-
-  test("proto transport: concurrent scans from many threads interleave safely") {
-    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val threads = (0 until 8).map { _ =>
-      new Thread(() => {
-        try counts.add(client.readRows("wide", Seq(RowRange.full), Nil).size)
-        catch { case _: Throwable => counts.add(-1) }
-      })
-    }
-    threads.foreach(_.start())
-    threads.foreach(_.join(30000))
-    import scala.jdk.CollectionConverters._
-    assert(counts.asScala.toSeq == Seq.fill(8)(1500))
   }
 }

@@ -3,15 +3,19 @@ package graft.store
 import graft.model._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The socket transport ([[SocketBigtableServer]]/[[SocketBigtableStore]])
-  * must be behaviorally indistinguishable from the store it fronts:
-  * same rows in the same order under the same filters, same error
-  * shapes, same sampling/statistics, and writes reaching the backing
-  * store — across a REAL localhost TCP hop, with the client's only
-  * state being (host, port). This is the offline proof that executors
-  * need nothing but the [[BigtableStore]] trait plus an address — the
-  * seam a gRPC-backed production client plugs into (reference
-  * datasource.rs:81-88).
+/** The socket transport ([[ProtoSocketBigtableServer]]/
+  * [[ProtoSocketBigtableStore]]) must be behaviorally indistinguishable
+  * from the store it fronts: same rows in the same order under the same
+  * filters, same error shapes, same sampling/statistics, and writes
+  * reaching the backing store — across a REAL localhost TCP hop, with
+  * the client's only state being (host, port). It must also behave as
+  * a connection should: partial scans release their socket, a dropped
+  * connection is a transient fault that [[RetryingStore]] resumes
+  * exactly, and concurrent scans do not interleave. This is the offline
+  * proof that executors need nothing but the [[BigtableStore]] trait
+  * plus an address — the seam a gRPC-backed production client plugs
+  * into (reference datasource.rs:81-88). The wire bytes themselves are
+  * pinned in [[ReadRowsProtoSpec]].
   */
 class SocketStoreSpec extends AnyFunSuite {
   private def cell(q: String, ts: Long, v: String, fam: String = "f") =
@@ -31,7 +35,7 @@ class SocketStoreSpec extends AnyFunSuite {
     b.build()
   }
 
-  private val server = new SocketBigtableServer(backing)
+  private val server = new ProtoSocketBigtableServer(backing)
   private val client = server.clientStore
 
   test("readRows parity with the backing store (ranges + filters)") {
@@ -68,7 +72,7 @@ class SocketStoreSpec extends AnyFunSuite {
 
   test("writes reach a mutable backing store; rejected on a read-only one") {
     val mut = new ConcurrentBigtable
-    val srv = new SocketBigtableServer(mut)
+    val srv = new ProtoSocketBigtableServer(mut)
     try {
       val c = srv.clientStore
       c.mutateRows("w", Seq("r1" -> Seq(cell("q", 1L, "x"))))
@@ -93,7 +97,7 @@ class SocketStoreSpec extends AnyFunSuite {
     }
     assert(bytes.length < 4096, s"socket store handle should be tiny, was ${bytes.length}B")
     val clone = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
-      .readObject().asInstanceOf[SocketBigtableStore]
+      .readObject().asInstanceOf[ProtoSocketBigtableStore]
     assert(clone.readRows("t", Seq(RowRange.point("a")), Nil).map(_.rowKey).toSeq == Seq("a"))
   }
 
@@ -109,16 +113,18 @@ class SocketStoreSpec extends AnyFunSuite {
   }
 
   test("mid-scan connection drop is a transient fault and RetryingStore resumes exactly") {
-    // A rogue server that serves the REAL protocol but hard-drops the
-    // FIRST scan's connection after 2 frames — no Done, no Failure, just
-    // a closed socket (a crashed server / reset network). Subsequent
-    // connections serve correctly. The real client must surface the
-    // truncation as TransientStoreException (NOT a clean end — that
-    // would be silent data loss), and RetryingStore must resume past the
-    // last delivered key over a fresh socket with no dupes or gaps.
-    import SocketProtocol._
-    import java.io.{BufferedInputStream, BufferedOutputStream, ObjectInputStream, ObjectOutputStream}
-    val requests = new java.util.concurrent.ConcurrentLinkedQueue[ReadRows]()
+    // A rogue server that speaks the real wire (method byte + request
+    // frame in; `[flag][len][ReadRowsResponse]` frames out) but
+    // hard-drops the first two scans after 2 frames — no end-of-stream
+    // frame, no Status, just a closed socket (a crashed server / reset
+    // network). Later connections serve correctly. The real client must
+    // surface the truncation as TransientStoreException (NOT a clean
+    // end — that would be silent data loss), and RetryingStore must
+    // resume past the last delivered key over a fresh connection with
+    // no dupes or gaps.
+    import ProtoSocket._
+    import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+    val requests = new java.util.concurrent.ConcurrentLinkedQueue[Seq[RowRange]]()
     val served = new java.util.concurrent.atomic.AtomicInteger(0)
     val srv = new java.net.ServerSocket(0, 8, java.net.InetAddress.getByName("127.0.0.1"))
     val accept = new Thread(() => {
@@ -127,29 +133,25 @@ class SocketStoreSpec extends AnyFunSuite {
         val n = served.getAndIncrement()
         val t = new Thread(() => {
           try {
-            val out = new ObjectOutputStream(new BufferedOutputStream(sock.getOutputStream))
-            out.flush()
-            val in = new ObjectInputStream(new BufferedInputStream(sock.getInputStream))
-            val req = in.readObject().asInstanceOf[ReadRows]
-            requests.add(req)
-            val rows = backing.readRows(req.table, req.ranges, req.filters)
+            val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+            val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+            in.readByte() // method: every request here is a ReadRows
+            val (table, ranges, filters) = ReadRowsProto.decodeReadRowsRequest(readFrame(in)._2)
+            requests.add(ranges)
+            val batches = backing.readRows(table, ranges, filters).grouped(100)
             var frames = 0
-            val batch = scala.collection.mutable.ArrayBuffer.empty[BtRow]
             var dropped = false
-            while (rows.hasNext && !dropped) {
-              batch += rows.next()
-              if (batch.size == 100) {
-                out.writeObject(RowsBatch(batch.toVector)); out.reset(); out.flush()
-                batch.clear()
-                frames += 1
-                // drop the first TWO scans (the raw-client probe below and
-                // the retried run's first attempt); later connections serve
-                if (n <= 1 && frames == 2) { sock.close(); dropped = true } // hard drop, no Done
-              }
+            while (batches.hasNext && !dropped) {
+              writeFrame(out, FlagMessage, ReadRowsProto.encodeReadRowsResponse(batches.next()))
+              out.flush()
+              frames += 1
+              // drop the raw-client probe below and the retried run's
+              // first attempt; later connections serve to the end
+              if (n <= 1 && frames == 2) { sock.close(); dropped = true }
             }
             if (!dropped) {
-              if (batch.nonEmpty) { out.writeObject(RowsBatch(batch.toVector)); out.reset() }
-              out.writeObject(Done); out.flush()
+              writeFrame(out, FlagEndOk, Array.emptyByteArray)
+              out.flush()
               sock.close()
             }
           } catch { case _: Throwable => () }
@@ -159,7 +161,7 @@ class SocketStoreSpec extends AnyFunSuite {
     })
     accept.setDaemon(true); accept.start()
     try {
-      val flaky = new SocketBigtableStore("127.0.0.1", srv.getLocalPort)
+      val flaky = new ProtoSocketBigtableStore("127.0.0.1", srv.getLocalPort)
       // the raw client surfaces the drop as a TRANSIENT fault mid-stream
       val e = intercept[TransientStoreException] {
         flaky.readRows("wide", Seq(RowRange.full), Nil).size
@@ -172,11 +174,11 @@ class SocketStoreSpec extends AnyFunSuite {
       val keys = retried.readRows("wide", Seq(RowRange.full), Nil).map(_.rowKey).toSeq
       assert(keys.size == 1500)
       assert(keys == keys.sorted && keys.distinct.size == 1500)
-      val reqs = requests.toArray(Array.empty[ReadRows])
+      val reqs = requests.toArray(Array.empty[Seq[RowRange]])
       assert(reqs.length >= 3) // probe scan, dropped scan, resumed scan
       val resumed = reqs.last
-      assert(RowRange.compareKeys(resumed.ranges.head.startKey, "k000199") > 0,
-        s"resumed scan must start past the last delivered key, got ${resumed.ranges.head.startKey}")
+      assert(RowRange.compareKeys(resumed.head.startKey, "k000199") > 0,
+        s"resumed scan must start past the last delivered key, got ${resumed.head.startKey}")
     } finally srv.close()
   }
 
